@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the SparkContext's listener bus, which Spark keeps
+  * package-private. */
+object ListenerBus {
+  /** Block until every event posted so far has reached the listeners,
+    * so totals read afterwards cover all finished jobs. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
